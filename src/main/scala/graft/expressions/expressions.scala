@@ -213,91 +213,19 @@ case class CodeDistance(left: Expression, right: Expression, metric: Metric, sig
   }
   override def prettyName: String = "code_distance"
 
+  private def mId = Distances.metricId(metric)
+
   override def nullSafeEval(a: Any, b: Any): Any = {
     val x = a.asInstanceOf[Array[Byte]]; val y = b.asInstanceOf[Array[Byte]]
-    @inline def at(arr: Array[Byte], i: Int): Int = if (signed) arr(i).toInt else arr(i) & 0xff
-    val n = math.min(x.length, y.length)
-    metric match {
-      case Metric.SquaredL2 | Metric.L2 =>
-        var acc = 0L; var i = 0
-        while (i < n) { val d = at(x, i) - at(y, i); acc += d.toLong * d; i += 1 }
-        if (metric == Metric.L2) math.sqrt(acc.toDouble) else acc
-      case Metric.L1 =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += math.abs(at(x, i) - at(y, i)); i += 1 }
-        acc
-      case Metric.Dot =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += at(x, i).toLong * at(y, i); i += 1 }
-        -acc
-      case Metric.Cosine =>
-        var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-        while (i < n) {
-          val p = at(x, i); val q = at(y, i)
-          dot += p.toLong * q; na += p.toLong * p; nb += q.toLong * q; i += 1
-        }
-        if (na == 0L || nb == 0L) 1.0
-        else {
-          val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-          1.0 - math.max(-1.0, math.min(1.0, c))
-        }
-    }
+    val d = Distances.codeDistance(mId, signed, x, 0, y, 0, math.min(x.length, y.length))
+    if (dataType == LongType) d.toLong else d
   }
 
   override protected def doGenCode(ctx: CodegenContext, ev: ExprCode): ExprCode = {
-    nullSafeCodeGen(ctx, ev, (a, b) => {
-      val i = ctx.freshName("i"); val n = ctx.freshName("n")
-      val rd = (arr: String) => if (signed) s"(int) $arr[$i]" else s"($arr[$i] & 0xff)"
-      val body = metric match {
-        case Metric.SquaredL2 | Metric.L2 =>
-          val acc = ctx.freshName("acc")
-          val fin = if (metric == Metric.L2) s"java.lang.Math.sqrt((double) $acc)" else acc
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  int d = ${rd(a)} - ${rd(b)};
-             |  $acc += (long) d * d;
-             |}
-             |${ev.value} = $fin;
-           """.stripMargin
-        case Metric.L1 =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += java.lang.Math.abs(${rd(a)} - ${rd(b)});
-             |}
-             |${ev.value} = $acc;
-           """.stripMargin
-        case Metric.Dot =>
-          val acc = ctx.freshName("acc")
-          s"""
-             |long $acc = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  $acc += (long) (${rd(a)}) * (${rd(b)});
-             |}
-             |${ev.value} = -$acc;
-           """.stripMargin
-        case Metric.Cosine =>
-          val dot = ctx.freshName("dot"); val na = ctx.freshName("na"); val nb = ctx.freshName("nb")
-          val c = ctx.freshName("c")
-          s"""
-             |long $dot = 0L, $na = 0L, $nb = 0L;
-             |for (int $i = 0; $i < $n; $i++) {
-             |  int p = ${rd(a)}; int q = ${rd(b)};
-             |  $dot += (long) p * q; $na += (long) p * p; $nb += (long) q * q;
-             |}
-             |if ($na == 0L || $nb == 0L) { ${ev.value} = 1.0; } else {
-             |  double $c = (double) $dot / (java.lang.Math.sqrt((double) $na) * java.lang.Math.sqrt((double) $nb));
-             |  ${ev.value} = 1.0 - java.lang.Math.max(-1.0, java.lang.Math.min(1.0, $c));
-             |}
-           """.stripMargin
-      }
-      s"""
-         |int $n = java.lang.Math.min($a.length, $b.length);
-         |$body
-       """.stripMargin
-    })
+    val cast = if (dataType == LongType) "(long) " else ""
+    nullSafeCodeGen(ctx, ev, (a, b) =>
+      s"${ev.value} = ${cast}graft.kernels.Distances.codeDistance($mId, $signed, " +
+        s"$a, 0, $b, 0, java.lang.Math.min($a.length, $b.length));")
   }
 
   override protected def withNewChildrenInternal(newLeft: Expression, newRight: Expression): Expression =

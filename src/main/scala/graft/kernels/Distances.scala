@@ -173,33 +173,65 @@ object Distances {
 
   // ---------- u8/i8 kernels: exact integer accumulation (distance-cpu.c:470-693) ----------
 
-  private def intKernel(signed: Boolean)(a: Array[Byte], b: Array[Byte], metric: Metric): Float = {
-    val n = a.length
-    @inline def at(arr: Array[Byte], i: Int): Int = if (signed) arr(i).toInt else arr(i) & 0xff
-    metric match {
-      case Metric.L2 | Metric.SquaredL2 =>
-        var acc = 0L; var i = 0
-        while (i < n) { val d = at(a, i) - at(b, i); acc += d.toLong * d; i += 1 }
-        if (metric == Metric.L2) math.sqrt(acc.toDouble).toFloat else acc.toFloat
-      case Metric.L1 =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += math.abs(at(a, i) - at(b, i)); i += 1 }
-        acc.toFloat
-      case Metric.Dot =>
-        var acc = 0L; var i = 0
-        while (i < n) { acc += at(a, i).toLong * at(b, i); i += 1 }
-        (-acc).toFloat
-      case Metric.Cosine =>
-        var dot = 0L; var na = 0L; var nb = 0L; var i = 0
-        while (i < n) {
-          val x = at(a, i); val y = at(b, i)
-          dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1
-        }
-        if (na == 0L || nb == 0L) 1.0f
-        else {
-          val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
-          (1.0 - math.max(-1.0, math.min(1.0, c))).toFloat
-        }
+  /** The one u8/i8 code kernel: `n` lanes of `a` from `aOff` against `n`
+    * lanes of `b` from `bOff`, accumulated in exact integer arithmetic.
+    * Every caller goes through it — [[onPacked]], `CodeDistance` (both
+    * evaluation paths) and the preloaded block scan, which walks one
+    * contiguous buffer by offset.
+    *
+    * The result is the metric's value as a Double: sq_l2 / l1 / dot are
+    * the exact integer sums (|Σ| ≤ n·255² < 2^53 for any Java array
+    * length, so the Double holds the accumulator exactly), l2 is its
+    * sqrt, cosine the clamped ratio of the three exact sums. Callers
+    * convert at the edge: `CodeDistance` to Long, [[onPacked]] to Float —
+    * the same single rounding as converting the Long directly.
+    */
+  def codeDistance(mId: Int, signed: Boolean,
+                   a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int): Double =
+    (mId: @annotation.switch) match {
+      case 0 => math.sqrt(codeSqL2(signed, a, aOff, b, bOff, n).toDouble)
+      case 1 => codeSqL2(signed, a, aOff, b, bOff, n).toDouble
+      case 2 => codeCosine(signed, a, aOff, b, bOff, n)
+      case 3 => (-codeDot(signed, a, aOff, b, bOff, n)).toDouble // negated; never -0.0
+      case _ => codeL1(signed, a, aOff, b, bOff, n).toDouble
+    }
+
+  // One small single-loop method per metric: the JIT compiles each loop
+  // tight and inlines the dispatch above into the caller. One method
+  // holding all four loops ran 1.5-2x slower per vector, cosine 5x
+  // (JDK 17, 4-core x86 VM).
+
+  @inline private def code(signed: Boolean, arr: Array[Byte], i: Int): Int =
+    if (signed) arr(i).toInt else arr(i) & 0xff
+
+  private def codeSqL2(signed: Boolean, a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int): Long = {
+    var acc = 0L; var i = 0
+    while (i < n) { val d = code(signed, a, aOff + i) - code(signed, b, bOff + i); acc += d.toLong * d; i += 1 }
+    acc
+  }
+
+  private def codeL1(signed: Boolean, a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int): Long = {
+    var acc = 0L; var i = 0
+    while (i < n) { acc += math.abs(code(signed, a, aOff + i) - code(signed, b, bOff + i)); i += 1 }
+    acc
+  }
+
+  private def codeDot(signed: Boolean, a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int): Long = {
+    var acc = 0L; var i = 0
+    while (i < n) { acc += code(signed, a, aOff + i).toLong * code(signed, b, bOff + i); i += 1 }
+    acc
+  }
+
+  private def codeCosine(signed: Boolean, a: Array[Byte], aOff: Int, b: Array[Byte], bOff: Int, n: Int): Double = {
+    var dot = 0L; var na = 0L; var nb = 0L; var i = 0
+    while (i < n) {
+      val x = code(signed, a, aOff + i); val y = code(signed, b, bOff + i)
+      dot += x.toLong * y; na += x.toLong * x; nb += y.toLong * y; i += 1
+    }
+    if (na == 0L || nb == 0L) 1.0
+    else {
+      val c = dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))
+      1.0 - math.max(-1.0, math.min(1.0, c))
     }
   }
 
@@ -229,8 +261,8 @@ object Distances {
     case ElemType.F32  => f32Packed(a, b, metric)
     case ElemType.F16  => withHalf(Fp16.f16ToFloat)(a, b, metric)
     case ElemType.BF16 => withHalf(Fp16.bf16ToFloat)(a, b, metric)
-    case ElemType.I8   => intKernel(signed = true)(a, b, metric)
-    case ElemType.U8   => intKernel(signed = false)(a, b, metric)
+    case ElemType.I8 | ElemType.U8 =>
+      codeDistance(metricId(metric), et == ElemType.I8, a, 0, b, 0, math.min(a.length, b.length)).toFloat
   }
 
   // ---------- double-precision kernels on float arrays ----------

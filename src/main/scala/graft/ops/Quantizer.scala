@@ -2,7 +2,6 @@ package graft.ops
 
 import org.apache.spark.sql.{DataFrame, SaveMode}
 import org.apache.spark.sql.functions._
-import org.apache.spark.storage.StorageLevel
 
 import graft.{QType, QuantParams}
 import graft.functions.{code_distance, quantize_codes, vectorLit}
@@ -351,20 +350,34 @@ object Quantizer {
       code_distance(col("code"), lit(qprobe), metric, p.qType).as("distance"))
   }
 
-  /** S5 `vector_quantize_preload`: pin the quant table in executor memory —
-    * the reference's contiguous in-RAM buffer (:1338-1404).
+  /** S5 `vector_quantize_preload`: pin the quant table in executor memory
+    * in the reference's layout — one contiguous n×dim code buffer plus an
+    * id array per store partition (:1338-1404), a MEMORY_ONLY block RDD
+    * built eagerly by one job.
+    *
+    * The result is a DataFrame with the store's `(id, code)` output over
+    * a new leaf ([[graft.sql.PreloadedCodes]]). Generic readers (counts,
+    * filters, joins, the certified plan's shortlist) see ordinary rows;
+    * top-k by `code_distance` against a literal probe ([[quantScan]], the
+    * `vector_quantize_scan` TVF, [[certifiedTopK]]'s stage 1) plans as
+    * [[graft.sql.PreloadedTopKExec]]: one task per block walks the buffer
+    * into a k-slot heap, and the driver merges k × blocks rows. Results
+    * equal the unpreloaded plan's, row for row.
+    *
+    * Release with [[cleanup]]`(df)`: `Dataset.unpersist()` does not reach
+    * the block RDD. Preloading installs [[graft.sql.GraftStrategy]] in the
+    * frame's session. NULL ids or codes, or two code lengths in one store
+    * partition, are rejected.
     */
-  def preload(quantDF: DataFrame): DataFrame = {
-    val cached = quantDF.persist(StorageLevel.MEMORY_ONLY)
-    cached.count() // materialize eagerly, like the reference's preload
-    cached
-  }
+  def preload(quantDF: DataFrame): DataFrame = graft.sql.PreloadedCodes.load(quantDF)
 
-  /** S6 `vector_quantize_cleanup`, preload-release half only: unpin a
-    * [[preload]]ed copy from executor memory. The full drop (store +
-    * sidecar + catalog params) is the path-taking overload below.
+  /** S6 `vector_quantize_cleanup`, preload-release half only: free the
+    * block RDD of every [[preload]]ed copy `quantDF` reads (a frame with
+    * none is left as it is). This is the release for a [[preload]]
+    * result. The full drop (store + sidecar + catalog params) is the
+    * path-taking overload below.
     */
-  def cleanup(quantDF: DataFrame): Unit = { quantDF.unpersist() }
+  def cleanup(quantDF: DataFrame): Unit = graft.sql.PreloadedCodes.release(quantDF)
 
   /** S6 `vector_quantize_cleanup` (sqlite-vector.c:1501-1524), the full
     * drop: release any preloaded copy, delete the on-disk quant store —
@@ -378,7 +391,7 @@ object Quantizer {
   def cleanup(spark: org.apache.spark.sql.SparkSession, quantPath: String,
               table: String = "", column: String = "",
               preloaded: Option[DataFrame] = None): Unit = {
-    preloaded.foreach(_.unpersist())
+    preloaded.foreach(cleanup)
     val p = new org.apache.hadoop.fs.Path(quantPath)
     val fs = p.getFileSystem(spark.sessionState.newHadoopConf())
     if (fs.exists(p)) fs.delete(p, true)

@@ -4,8 +4,6 @@ import org.apache.spark.sql.{Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.catalyst.expressions.{Alias, Attribute, LeafExpression, NamedExpression}
 import org.apache.spark.sql.catalyst.expressions.codegen.CodegenFallback
-import org.apache.spark.sql.catalyst.plans.logical.{LogicalPlan, OneRowRelation, Project}
-import org.apache.spark.sql.catalyst.rules.Rule
 import org.apache.spark.sql.execution.command.LeafRunnableCommand
 import org.apache.spark.sql.types.DataType
 
@@ -26,8 +24,8 @@ import org.apache.spark.sql.types.DataType
   *     returns a [[LifecycleCall]] — a non-foldable, non-deterministic
   *     expression carrying the side effect as a thunk. Analysis and
   *     EXPLAIN never invoke the thunk;
-  *  2. [[LifecycleExecutionRule]] rewrites the canonical statement shape
-  *     `SELECT lifecycle_fn(...)` (a `Project` over `OneRowRelation`) into
+  *  2. [[GraftStrategy]] plans the canonical statement shape
+  *     `SELECT lifecycle_fn(...)` (a `Project` over `OneRowRelation`) as
   *     [[RunLifecycleCommand]], a `LeafRunnableCommand`. Commands execute
   *     their `run()` on the DRIVER when the statement's result is first
   *     requested — cluster-safe (the thunk can launch Spark jobs) and
@@ -103,18 +101,5 @@ case class RunLifecycleCommand(projectList: Seq[NamedExpression])
         CatalystTypeConverters.convertToScala(other.eval(InternalRow.empty), other.dataType)
     }
     Seq(Row.fromSeq(values))
-  }
-}
-
-/** Rewrites the standalone lifecycle statement shape into the driver-side
-  * command. Runs at the tail of optimization (injected via
-  * `GraftExtensions` or `spark.experimental.extraOptimizations`), after
-  * which no rule reorders a leaf command; EXPLAIN renders it unexecuted.
-  */
-object LifecycleExecutionRule extends Rule[LogicalPlan] {
-  override def apply(plan: LogicalPlan): LogicalPlan = plan.transform {
-    case Project(projectList, _: OneRowRelation)
-        if projectList.exists(_.exists(_.isInstanceOf[LifecycleCall])) =>
-      RunLifecycleCommand(projectList)
   }
 }

@@ -19,7 +19,9 @@ import graft.QType
   * API.md:212-261), realized as Catalyst table functions that expand to a
   * declarative plan: Project(distance) → Sort → Limit over the registered
   * table. Catalyst then plans the usual TakeOrderedAndProject +
-  * codegen'd scan — the TVF adds SQL ergonomics, not a new physical path.
+  * codegen'd scan — the TVF adds SQL ergonomics, not a new physical path;
+  * over a preloaded shadow store [[GraftStrategy]] plans the same tree as
+  * [[PreloadedTopKExec]].
   *
   * Like the reference, the (table, column) pair must be registered first
   * (`vector_init` ≙ VectorCatalog.init, which also resolves the id column
@@ -195,8 +197,8 @@ object GraftTableFunctions {
   // STEPS, not when it prepares. Here each builder validates its arguments
   // (pure, fail-fast at analysis) and returns a LifecycleCall whose side
   // effect runs at EXECUTION — the standalone statement shape
-  // `SELECT lifecycle_fn(...)` is rewritten by LifecycleExecutionRule into
-  // a driver-side command (see Lifecycle.scala), so EXPLAIN, view
+  // `SELECT lifecycle_fn(...)` is planned by GraftStrategy as a
+  // driver-side command (see Lifecycle.scala), so EXPLAIN, view
   // re-resolution and failed analysis never fire a side effect. The
   // expression's value is the reference's return (NULL, or the quantized
   // row count). vector_quantize_memory is the one deliberate exception:
@@ -209,6 +211,13 @@ object GraftTableFunctions {
     * store root and the temp view the quantized scan reads.
     */
   private def shadowName(table: String, column: String) = s"vector0_${table}_$column"
+
+  /** Frees the preloaded copy behind the shadow view, if there is one —
+    * every rebind of the view (re-quantize, append, compact, preload,
+    * cleanup) goes through here, so no block RDD outlives its view.
+    */
+  private def releaseShadow(spark: SparkSession, shadow: String): Unit =
+    if (spark.catalog.tableExists(shadow)) Quantizer.cleanup(spark.table(shadow))
 
   private def storePath(spark: SparkSession, cfg: graft.VectorConfig,
                         table: String, column: String): String = {
@@ -263,7 +272,7 @@ object GraftTableFunctions {
           graft.VectorConfig.humanToNumber(kv.substring(kv.indexOf('=') + 1))
       }.getOrElse(cfg.maxMemory)
       val shadow = shadowName(table, column)
-      if (spark.catalog.tableExists(shadow)) spark.table(shadow).unpersist()
+      releaseShadow(spark, shadow)
       val (_, rows) = Quantizer.quantize(spark.table(table), cfg.idCol, column,
         storePath(spark, cfg, table, column), cfg.qType, table, column, maxMem, cfg.dim)
       spark.read.parquet(storePath(spark, cfg, table, column)).createOrReplaceTempView(shadow)
@@ -294,6 +303,7 @@ object GraftTableFunctions {
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.quantizeAppend(spark.table(wave), cfg.idCol, column,
           path, cfg.maxMemory, cfg.dim)
+        releaseShadow(spark, shadowName(table, column))
         spark.read.parquet(path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
@@ -314,6 +324,7 @@ object GraftTableFunctions {
         val cfg = config(table, column)
         val path = storePath(spark, cfg, table, column)
         val rows = Quantizer.compact(spark, path, cfg.maxMemory, cfg.dim)
+        releaseShadow(spark, shadowName(table, column))
         spark.read.parquet(path).createOrReplaceTempView(shadowName(table, column))
         rows
       })
@@ -337,8 +348,10 @@ object GraftTableFunctions {
   }
 
   /** `vector_quantize_preload(tbl, col)` → NULL. Pins the shadow store in
-    * executor memory and rebinds the shadow view to the pinned copy, so
-    * subsequent `vector_quantize_scan` calls read RAM (API.md:139-150).
+    * executor memory as one contiguous code block per partition
+    * ([[Quantizer.preload]]) and rebinds the shadow view to it, so
+    * subsequent `vector_quantize_scan` calls read RAM (API.md:139-150). A
+    * second preload rebuilds from the current copy, then frees it.
     */
   def preloadBuilder(args: Seq[Expression]): Expression = args match {
     case Seq(t, c) =>
@@ -346,8 +359,9 @@ object GraftTableFunctions {
       val column = strArg(c, "column name")
       LifecycleCall("vector_quantize_preload", StringType, () => {
         val spark = Lifecycle.activeSession("vector_quantize_preload")
-        Quantizer.preload(shadowTable(spark, table, column))
-          .createOrReplaceTempView(shadowName(table, column))
+        val current = shadowTable(spark, table, column)
+        Quantizer.preload(current).createOrReplaceTempView(shadowName(table, column))
+        Quantizer.cleanup(current)
         null
       })
     case other =>
@@ -367,10 +381,8 @@ object GraftTableFunctions {
         val spark = Lifecycle.activeSession("vector_quantize_cleanup")
         val cfg = config(table, column)
         val shadow = shadowName(table, column)
-        if (spark.catalog.tableExists(shadow)) {
-          spark.table(shadow).unpersist()
-          spark.catalog.dropTempView(shadow)
-        }
+        releaseShadow(spark, shadow)
+        spark.catalog.dropTempView(shadow)
         Quantizer.cleanup(spark, storePath(spark, cfg, table, column), table, column)
         null
       })
@@ -494,13 +506,10 @@ object GraftTableFunctions {
     scalarBuilders.foreach { case (name, b) =>
       sreg.createOrReplaceTempFunction(name, b, "scala_udf")
     }
-    // the lifecycle statement shape must plan as a driver-side command
-    // (Lifecycle.scala); experimental.extraOptimizations is the live-
-    // session hook for the same rule inject() adds at session build
-    if (!spark.experimental.extraOptimizations.contains(LifecycleExecutionRule)) {
-      spark.experimental.extraOptimizations =
-        spark.experimental.extraOptimizations :+ LifecycleExecutionRule
-    }
+    // lifecycle statements and preloaded scans plan through GraftStrategy;
+    // experimental.extraStrategies is the live-session hook for the same
+    // strategy inject() adds at session build
+    GraftStrategy.install(spark)
   }
 
   /** `SparkSessionExtensions` injection — enable with
@@ -515,7 +524,7 @@ object GraftTableFunctions {
       ext.injectFunction((FunctionIdentifier(name),
         new ExpressionInfo(GraftTableFunctions.getClass.getCanonicalName, name), b))
     }
-    ext.injectOptimizerRule(_ => LifecycleExecutionRule)
+    ext.injectPlannerStrategy(_ => GraftStrategy)
   }
 }
 

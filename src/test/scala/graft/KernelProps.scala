@@ -120,6 +120,27 @@ object KernelProps extends Properties("kernels") {
         }): _*)
     }
 
+  property("code kernel at offsets: exact integer sums over the selected lanes") =
+    forAll(Gen.listOf(Gen.chooseNum(-128, 127)), Gen.listOf(Gen.chooseNum(-128, 127)),
+      Gen.chooseNum(0, 5), Gen.chooseNum(0, 5), Gen.oneOf(true, false)) { (xs, ys, aOff, bOff, signed) =>
+      val a = xs.map(_.toByte).toArray; val b = ys.map(_.toByte).toArray
+      val n = math.max(0, math.min(a.length - aOff, b.length - bOff))
+      def lane(arr: Array[Byte], i: Int): Long = if (signed) arr(i).toLong else (arr(i) & 0xff).toLong
+      val pairs = (0 until n).map(i => (lane(a, aOff + i), lane(b, bOff + i)))
+      val sq = pairs.map { case (x, y) => (x - y) * (x - y) }.sum
+      val (dot, na, nb) = (pairs.map(p => p._1 * p._2).sum, pairs.map(p => p._1 * p._1).sum,
+        pairs.map(p => p._2 * p._2).sum)
+      val cos = if (na == 0 || nb == 0) 1.0
+        else 1.0 - math.max(-1.0, math.min(1.0, dot.toDouble / (math.sqrt(na.toDouble) * math.sqrt(nb.toDouble))))
+      val want = Map[Metric, Double](Metric.L2 -> math.sqrt(sq.toDouble), Metric.SquaredL2 -> sq.toDouble,
+        Metric.Cosine -> cos, Metric.Dot -> (-dot).toDouble,
+        Metric.L1 -> pairs.map { case (x, y) => math.abs(x - y) }.sum.toDouble)
+      Prop.all(Metric.all.map { m =>
+        val got = Distances.codeDistance(Distances.metricId(m), signed, a, aOff, b, bOff, n)
+        Prop(got == want(m) && !(got == 0.0 && 1.0 / got < 0)) :| s"$m signed=$signed: $got vs ${want(m)}"
+      }: _*)
+    }
+
   property("packed f32 kernels equal the Array[Float] kernels bit-for-bit") =
     forAll(vec, vec) { (a0, b0) =>
       val n = math.min(a0.length, b0.length)
